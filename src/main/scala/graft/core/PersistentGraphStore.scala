@@ -318,28 +318,67 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
   /** Write the next version layer. `df` must be the COMPLETE new content of
     * every bucket it contains rows for — buckets without rows keep their
     * previous layer, unless `full` marks this version as a complete
-    * snapshot (then absent buckets are empty).
+    * snapshot (then absent buckets are empty). The layer is routed over
+    * the table's whole bucket domain: which buckets `df` fills is not
+    * known without a job of its own.
     */
   def write(table: String, df: DataFrame, bucketCols: Seq[String],
       full: Boolean = false): Int = StoreTimers.entry {
     val m = metaFor(table, bucketCols)
-    // co-locate each bucket's rows in ONE task before the dynamic-
-    // partition write: the upstream classify join is partitioned by
-    // key-hash, so without this every task holds rows of ~every
-    // touched bucket and the writer opens (#tasks × #buckets) files —
-    // measured 1049 files in one fixture edges layer, ~9 KB each, and
-    // every later merge re-opens them all. The explicit partition
-    // count keeps AQE from coalescing below one-task-per-bucket; one
-    // narrow batch-sized shuffle buys ≤ nBuckets well-sized files per
-    // layer, which is also the layout readers want. (r18 A/B kept it:
-    // the AQE-coalescible `repartition(col)` form saved ~5% CPU but
-    // serialized each tiny layer's ≤ nBuckets parquet-writer opens into
-    // ONE task — BenchDag wall 222 s → 386-414 s over the two-pass DAG.
-    // One-task-per-bucket keeps the file opens parallel.)
-    val plan = df.withColumn("__b", bucketExpr(m))
-      .repartition(m.nBuckets, col("__b"))
+    writeLayer(table, df, m, 0 until m.nBuckets, full)
+  }
+
+  /** [[write]] with the set of buckets the layer fills named by the
+    * caller (soft-delete snapshot, compaction), so the write wave is sized
+    * to them rather than to the bucket domain.
+    */
+  private def writeLayer(table: String, df: DataFrame, m: Meta,
+      buckets: Seq[Int], full: Boolean): Int = {
+    val plan = routed(df.withColumn("__b", bucketExpr(m)), buckets).drop(Route)
     writeStaged(table, plan, full)(keep = true).get
   }
+
+  /** Routing column of a layer shuffle; dropped before the write. */
+  private val Route = "__route"
+
+  /** Co-locate each bucket's rows in ONE task before the dynamic-partition
+    * write, so a layer holds exactly one file per bucket (without this
+    * shuffle the upstream key-hash partitioning spreads every bucket over
+    * every task: 1049 files in one fixture edges layer, each re-opened by
+    * every later merge).
+    *
+    * One wave, balanced: the shuffle has n = min(#buckets, task slots)
+    * partitions and the sorted bucket ids are dealt to them round-robin,
+    * so per-task bucket counts differ by at most one. Hashing `__b`
+    * directly does not balance (32 buckets into 4 partitions land
+    * 14/7/6/5; into 32 partitions, 12 stay empty), so each row carries an
+    * int routing key, chosen on the driver, whose Spark hash partition is
+    * its bucket's slot ([[PersistentGraphStore.route]]): no extra job, no
+    * range sampling. A write task's cost is mostly fixed (~40 ms to
+    * deserialize) and per file, not per row, so one wave of n tasks beats
+    * one task per bucket in B/n waves: on a 4-core host the perfbench
+    * `resync` delta write fell from 3.49 to 2.92 s (median of 12 pairs)
+    * and store tasks per unit from 112 to 64. At ≥ B slots this is one
+    * task per bucket, the layout whose parallel parquet-writer opens the
+    * r18 A/B kept over the AQE-coalescible `repartition(col)` form
+    * (BenchDag 222 s vs 386-414 s).
+    *
+    * The explicit partition count keeps AQE from coalescing the shuffle.
+    * The frame keeps [[Route]] so a per-bucket window can partition by
+    * (`__b`, [[Route]]), which the shuffle already clusters, adding no
+    * exchange; callers drop it before the write.
+    */
+  private def routed(bucketed: DataFrame, buckets: Seq[Int]): DataFrame = {
+    val (n, keys) = PersistentGraphStore.route(buckets,
+      spark.sparkContext.defaultParallelism)
+    bucketed.withColumn(Route, element_at(typedLit(keys), col("__b").cast("int")))
+      .repartition(n, col(Route))
+  }
+
+  /** Per-bucket max of the boolean `flag` over a [[routed]] frame. */
+  private def anyInBucket(flag: Column): Column =
+    max(flag.cast("int")).over(
+      org.apache.spark.sql.expressions.Window.partitionBy(col("__b"), col(Route)))
 
   /** Write an already-bucketed plan (`__b` column present and
     * repartitioned) to a STAGING directory, then publish it as the next
@@ -398,10 +437,13 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
       readMeta(table).flatMap { m =>
         // latest, never the pinned view: folding only pinned layers into
         // a NEW top snapshot would drop same-level writes above the pin
-        readLatest(table).map { cur =>
-          val v = write(table, cur, m.bucketCols, full = true)
+        val dirs = leafDirsLatest(table)
+        if (dirs.isEmpty) None
+        else {
+          val v = writeLayer(table, readDirs(dirs.map(_._2)), m,
+            dirs.map(_._1), full = true)
           if (prune) vacuum(table)
-          v
+          Some(v)
         }
       }
     } }
@@ -485,8 +527,7 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
     // sibling creates it before we take the lock, mergeLocked computes
     // the set inside the lock exactly as before.
     val preDiscover = !softDelete && latestVersion(table).nonEmpty
-    if (preDiscover) incoming.persist()
-    try {
+    cachedWhile(preDiscover, incoming) {
       val pre =
         if (preDiscover)
           Some(touchedBuckets(incoming,
@@ -494,9 +535,20 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
         else None
       lockFor(table).synchronized {
         mergeLocked(table, incoming, keyCols, compareCols, setCols,
-          softDelete, pre, cached = preDiscover)
+          softDelete, pre)
       }
-    } finally if (preDiscover) { incoming.unpersist(); () }
+    }
+  }
+
+  /** Run `f` with `df` cached when `cache` holds. A frame the caller has
+    * already cached is used as it is and left cached: only a cache this
+    * store created is dropped afterwards.
+    */
+  private def cachedWhile[T](cache: Boolean, df: DataFrame)(f: => T): T = {
+    val owned = cache &&
+      df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    if (owned) df.persist()
+    try f finally if (owned) { df.unpersist(); () }
   }
 
   private def mergeLocked(
@@ -506,8 +558,7 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
       compareCols: Seq[String],
       setCols: Seq[String],
       softDelete: Boolean,
-      pre: Option[Set[Int]],
-      cached: Boolean): Map[String, Long] = {
+      pre: Option[Set[Int]]): Map[String, Long] = {
     val m = metaFor(table, keyCols)
     def normalizeSets(df: DataFrame): DataFrame =
       setCols.foldLeft(df)((d, c) => d.withColumn(c, sort_array(col(c))))
@@ -527,13 +578,13 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
     }
 
     // the upsert branch evaluates `incoming` twice (bucket scan +
-    // classify) — the CALLER persisted it pre-lock (see merge) so an
-    // expensive upstream pipeline runs once; soft-delete merges consume
-    // incoming exactly once (no bucket scan), so caching would be pure
-    // overhead there. `cached = false` only in the create-race path
-    // (sibling created the table between the pre-lock check and here):
-    // then the bucket scan + classify each evaluate incoming — correct,
-    // marginally slower, and rare by construction.
+    // classify) — merge cached it pre-lock so an expensive upstream
+    // pipeline runs once; soft-delete merges consume incoming exactly
+    // once (no bucket scan), so caching would be pure overhead there.
+    // Only the create-race path (a sibling created the table between the
+    // pre-lock check and here) runs uncached: then the bucket scan and
+    // classify each evaluate incoming — correct, marginally slower, and
+    // rare by construction.
     val touched: Option[Set[Int]] =
       if (softDelete) None
       else Some(pre.getOrElse(touchedBuckets(incoming, m)))
@@ -568,8 +619,12 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
               max(col(GraphStore.REWRITE).cast("int")).as("rw"))
             .collect()
           if (cells.exists(_.getInt(3) == 1)) {
-            write(table, GraphStore.apply(classified.drop(GraphStore.REWRITE)),
-              keyCols, full = true)
+            // the snapshot holds every bucket with a surviving row
+            val kept = cells.filter(_.getString(1) != "delete")
+              .map(_.getInt(0)).toSeq
+            writeLayer(table,
+              GraphStore.apply(classified.drop(GraphStore.REWRITE)), m,
+              kept, full = true)
             maybeCompact(table)
           }
           cells.groupBy(_.getString(1)).view
@@ -591,28 +646,16 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
         // (the MERGE file-skipping analogue — at 100 TB the per-batch
         // write cost stays O(changed buckets), not O(touched buckets)).
         // The bucket shuffle the window needs is the SAME shuffle the
-        // layer write wants anyway (one task per bucket, well-sized
-        // files); an all-noop replay pays it on touched-bucket rows where
-        // the old path paid a cache materialization — a wash.
-        // r19: size the layer shuffle to the TOUCHED bucket count, not the
-        // table's full bucket count — classified holds rows of touched
-        // buckets only (current was pruned to them; incoming defines
-        // them), so a trickle merge runs 1-3 write tasks instead of
-        // nBuckets mostly-empty ones (guide §2.2 fewer tasks; the empty
-        // tasks were pure scheduling constant × hundreds of merges in the
-        // loader DAG). Scale-adaptive by construction: a batch that
-        // touches every bucket keeps one task per bucket, the layout the
-        // r18 A/B pinned (parallel parquet-writer opens). A hash collision
-        // at small counts just means one task writes two bucket files
-        // sequentially — both tiny by definition of the small count.
-        val nParts = touched
-          .map(t => math.min(m.nBuckets, math.max(1, t.size)))
-          .getOrElse(m.nBuckets)
-        val bucketed = classified
-          .withColumn("__b", bucketExpr(m))
-          .repartition(nParts, col("__b"))
-        val anyRewrite = max(col(GraphStore.REWRITE).cast("int")).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("__b")))
+        // layer write wants anyway ([[routed]]: one wave, the touched
+        // buckets dealt round-robin to min(touched, task slots) tasks);
+        // an all-noop replay pays it on touched-bucket rows where the old
+        // path paid a cache materialization — a wash. classified holds
+        // rows of touched buckets only (current was pruned to them;
+        // incoming defines them), so a trickle merge runs one task per
+        // touched bucket and a batch touching every bucket runs one wave.
+        val bucketed = routed(classified.withColumn("__b", bucketExpr(m)),
+          touched.get.toSeq)
+        val anyRewrite = anyInBucket(col(GraphStore.REWRITE))
         val obs = org.apache.spark.sql.Observation()
         val observed = bucketed
           .withColumn("__rw_b", anyRewrite)
@@ -623,7 +666,7 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
               count(when(col(GraphStore.ACTION) === a, 1)).as(a)): _*)
         val toWrite = GraphStore.apply(
           observed.filter(col("__rw_b") === 1)
-            .drop("__rw_b", GraphStore.REWRITE))
+            .drop("__rw_b", Route, GraphStore.REWRITE))
         writeStaged(table, toWrite, full = false) {
           obs.get("rewrites").asInstanceOf[Number].longValue > 0L
         }.foreach(_ => maybeCompact(table))
@@ -655,15 +698,14 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
       // loaders' edge upserts overlap it instead of serializing on the
       // edges lock; the anti-join + write stay under the lock
       val preDiscover = latestVersion("edges").nonEmpty
-      if (preDiscover) candidates.persist()
-      try {
+      cachedWhile(preDiscover, candidates) {
         val pre =
           if (preDiscover)
             Some(touchedBuckets(candidates,
               lockFor("edges").synchronized(metaFor("edges", EdgeKey))))
           else None
         lockFor("edges").synchronized { upsertEdgesLocked(candidates, pre) }
-      } finally if (preDiscover) { candidates.unpersist(); () }
+      }
     }
 
   private def upsertEdgesLocked(candidates: DataFrame,
@@ -689,23 +731,19 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
             allowMissingColumns = true)
         case None => candidates.withColumn("__fresh", lit(true))
       }
-      // same touched-bucket-count layer shuffle as merge (r19): the layer
-      // holds candidate-bucket rows only (existing was pruned to them;
-      // every candidate edge lands in one of them by definition)
-      val nParts = touched
-        .map(t => math.min(m.nBuckets, math.max(1, t.size)))
-        .getOrElse(m.nBuckets)
-      val bucketed = layer
-        .withColumn("__b", bucketExpr(m))
-        .repartition(nParts, col("__b"))
-      val anyFresh = max(col("__fresh").cast("int")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("__b")))
+      // same one-wave layer shuffle as merge ([[routed]]), over the
+      // candidate buckets: the layer holds their rows only (existing was
+      // pruned to them; every candidate edge lands in one of them by
+      // definition). The first write routes over the whole bucket domain.
+      val bucketed = routed(layer.withColumn("__b", bucketExpr(m)),
+        touched.map(_.toSeq).getOrElse(0 until m.nBuckets))
+      val anyFresh = anyInBucket(col("__fresh"))
       val obs = org.apache.spark.sql.Observation()
       val toWrite = bucketed
         .withColumn("__f_b", anyFresh)
         .observe(obs, count(when(col("__fresh"), 1)).as("created"))
         .filter(col("__f_b") === 1)
-        .drop("__f_b", "__fresh")
+        .drop("__f_b", Route, "__fresh")
       writeStaged("edges", toWrite, full = false) {
         obs.get("created").asInstanceOf[Number].longValue > 0L
       }.foreach(_ => maybeCompact("edges"))
@@ -717,4 +755,38 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
   def upsertSource(source: DataFrame): Map[String, Long] =
     merge("sources", source, keyCols = Seq("name"),
       compareCols = source.columns.filterNot(_ == "name").toSeq)
+}
+
+object PersistentGraphStore {
+  /** Layer-shuffle routing for the given buckets over `slots` task slots:
+    * the partition count n = min(#buckets, slots), and each bucket's int
+    * routing key. The sorted bucket ids are dealt round-robin — the bucket
+    * of sorted rank r goes to partition r mod n — so per-partition bucket
+    * counts differ by at most one.
+    */
+  private[core] def route(buckets: Seq[Int], slots: Int): (Int, Map[Int, Int]) = {
+    val sorted = buckets.distinct.sorted
+    val n = math.max(1, math.min(sorted.size, slots))
+    val keys = routingKeys(n)
+    n -> sorted.zipWithIndex.map { case (b, r) => b -> keys(r % n) }.toMap
+  }
+
+  /** `keys(s)` is the smallest non-negative int that `repartition(n, key)`
+    * sends to partition s: Spark's hash partitioning of one int column is
+    * `pmod(murmur3(key, seed 42), n)`. Every partition is reached within
+    * about n·ln n candidates.
+    */
+  private[core] def routingKeys(n: Int): Array[Int] = {
+    require(n >= 1, s"partition count must be >= 1, got $n")
+    val keys = Array.fill(n)(-1)
+    var found = 0
+    var k = 0
+    while (found < n) {
+      val s = Math.floorMod(
+        org.apache.spark.unsafe.hash.Murmur3_x86_32.hashInt(k, 42), n)
+      if (keys(s) < 0) { keys(s) = k; found += 1 }
+      k += 1
+    }
+    keys
+  }
 }

@@ -809,10 +809,18 @@ object Retrieval {
     * exploded (query, doc, word, start) vote row); this form is a pure
     * map-side higher-order expression, so the vote stream goes straight
     * into the partial-aggregating groupBy with one fewer Exchange.
+    *
+    * Precondition, enforced: `positions` is strictly ascending. A repeated
+    * or descending position would make its interval start above `p`, and
+    * `sequence` would then count DOWN, emitting votes outside the window;
+    * such a row fails the query with `raise_error` instead.
     */
   private def coveredStarts(window: Int): Column = expr(
     s"""flatten(transform(positions, (p, i) -> sequence(
        |  CASE WHEN i = 0 THEN greatest(0L, p - ${window - 1}L)
+       |       WHEN element_at(positions, i) >= p THEN raise_error(concat(
+       |         'coveredStarts: positions must be strictly ascending, got ',
+       |         element_at(positions, i), ' then ', p))
        |       ELSE greatest(greatest(0L, p - ${window - 1}L),
        |                     element_at(positions, i) + 1L) END,
        |  p)))""".stripMargin)

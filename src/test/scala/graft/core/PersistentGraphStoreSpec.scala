@@ -1,9 +1,15 @@
 package graft.core
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+
+import scala.jdk.CollectionConverters._
 
 import graft.TestSpark
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 class PersistentGraphStoreSpec extends AnyFunSuite {
@@ -232,5 +238,176 @@ class PersistentGraphStoreSpec extends AnyFunSuite {
     store.vacuumAll()
     assert(nLayers == live, s"vacuum must prune superseded layers")
     assert(store.read("vertices").get.count() == 6)
+  }
+
+  // ---- one-wave, bucket-balanced layer writes ------------------------------
+
+  private val nBuckets = 32
+  private def slots = spark.sparkContext.defaultParallelism
+
+  /** Bucket ids `df` lands in under the store's bucketing of `keys`. */
+  private def bucketsOf(df: DataFrame, keys: String*): Set[Int] =
+    df.select(pmod(xxhash64(keys.map(col): _*), lit(nBuckets)).cast("int"))
+      .distinct().collect().map(_.getInt(0)).toSet
+
+  /** Task counts of the stages in which a result task wrote output. */
+  private class WriteStages extends SparkListener {
+    private val numTasks = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    private val writing = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      numTasks.put(e.stageInfo.stageId, e.stageInfo.numTasks)
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      if (e.taskType == "ResultTask" && e.taskMetrics != null &&
+          e.taskMetrics.outputMetrics.bytesWritten > 0) writing.add(e.stageId)
+    def tasks: Seq[Int] = writing.asScala.toSeq.sorted.map(numTasks.get(_))
+  }
+
+  /** Run `op`, which must write one layer of `table` holding exactly
+    * `buckets`, and check the one-wave layout: one file per bucket, one
+    * write stage of min(#buckets, slots) tasks, and the bucket of sorted
+    * rank r written by task r mod n — so per-task bucket counts differ by
+    * at most one.
+    */
+  private def assertOneWave(root: Path, store: PersistentGraphStore,
+      table: String, buckets: Set[Int])(op: => Unit): Unit = {
+    val before = store.latestVersion(table)
+    val listener = new WriteStages
+    spark.sparkContext.addSparkListener(listener)
+    try { op; TestListenerBus.drain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    val v = store.latestVersion(table)
+    assert(v.isDefined && v != before, s"$table: no layer written")
+    val n = math.min(buckets.size, slots)
+    assert(listener.tasks == Seq(n),
+      s"$table: write stage task counts ${listener.tasks}, want one stage of $n")
+    val vDir = root.resolve(f"$table/v=${v.get}%05d")
+    val files: Map[Int, Seq[Int]] = Files.list(vDir).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("__b="))
+      .map { b =>
+        b.getFileName.toString.drop(4).toInt ->
+          Files.list(b).iterator().asScala.map(_.getFileName.toString)
+            .filter(_.startsWith("part-")).map(_.slice(5, 10).toInt).toSeq
+      }.toMap
+    assert(files.keySet == buckets, s"$table: buckets written")
+    assert(files.values.forall(_.size == 1),
+      s"$table: files per bucket ${files.filter(_._2.size != 1)}")
+    val task = files.view.mapValues(_.head).toMap
+    buckets.toSeq.sorted.zipWithIndex.foreach { case (b, r) =>
+      assert(task(b) == r % n, s"$table: bucket $b (rank $r) on task ${task(b)}")
+    }
+    val perTask = task.values.groupBy(identity).values.map(_.size)
+    assert(perTask.size == n && perTask.max - perTask.min <= 1,
+      s"$table: buckets per task $perTask")
+  }
+
+  private def terms(ids: Range, tag: String) =
+    ids.map(i => (s"t$i", s"$tag$i")).toDF("sourceId", "name")
+
+  test("upsert merge, first write, soft-delete snapshot and compact " +
+    "each write one balanced wave") {
+    val root = Files.createTempDirectory("graft-store")
+    val store = new PersistentGraphStore(spark, root.toString, nBuckets)
+    def merge(df: DataFrame, softDelete: Boolean = false) =
+      store.merge("terms", df, Seq("sourceId"), compareCols = Seq("name"),
+        softDelete = softDelete)
+    val base = terms(0 until 2000, "n")
+    val all = bucketsOf(base, "sourceId")
+    assert(all.size == nBuckets)
+    // first write: routed over the whole bucket domain
+    assertOneWave(root, store, "terms", all)(merge(base))
+    // an upsert that changes a row in every bucket it touches
+    val delta = terms(0 until 2000 by 5, "u")
+    assertOneWave(root, store, "terms", bucketsOf(delta, "sourceId"))(merge(delta))
+    // a trickle: fewer buckets than task slots, one bucket per task
+    val trickle = terms(0 until 3, "w")
+    val few = bucketsOf(trickle, "sourceId")
+    assert(few.size < slots)
+    assertOneWave(root, store, "terms", few)(merge(trickle))
+    // soft delete: the _FULL snapshot holds every bucket with a survivor
+    val snapshot = terms(0 until 1000, "n")
+    assertOneWave(root, store, "terms", bucketsOf(snapshot, "sourceId"))(
+      merge(snapshot, softDelete = true))
+    store.merge("terms", terms(2000 until 2002, "x"), Seq("sourceId"),
+      compareCols = Seq("name"))
+    val live = bucketsOf(store.read("terms").get, "sourceId")
+    assertOneWave(root, store, "terms", live)(store.compact("terms"))
+    assert(store.read("terms").get.count() == 1002)
+  }
+
+  test("edge upsert writes one balanced wave, first write and delta") {
+    val root = Files.createTempDirectory("graft-store")
+    val store = new PersistentGraphStore(spark, root.toString, nBuckets)
+    def edges(ids: Range) = ids.map(i => (s"a$i", s"b$i", "SubClassOf"))
+      .toDF("out", "in", "edgeClass")
+    val first = edges(0 until 1500)
+    assertOneWave(root, store, "edges", bucketsOf(first, store.EdgeKey: _*))(
+      store.upsertEdges(first))
+    val delta = edges(1000 until 1300)
+    val fresh = edges(1500 until 1800)
+    // only buckets holding a fresh edge are rewritten, so the fresh edges
+    // must cover every candidate bucket for the layer to hold them all
+    assert(bucketsOf(fresh, store.EdgeKey: _*) ==
+      bucketsOf(delta.union(fresh), store.EdgeKey: _*))
+    assertOneWave(root, store, "edges", bucketsOf(fresh, store.EdgeKey: _*))(
+      assert(store.upsertEdges(delta.union(fresh)) == Map("created" -> 300L)))
+    assert(store.read("edges").get.count() == 1800)
+  }
+
+  test("layer routing ≡ brute-force round-robin on random bucket sets") {
+    // route() promises: n = min(#buckets, slots) partitions, and Spark's
+    // hash partitioning of each bucket's key — pmod(hash(key), n), the
+    // expression repartition(n, key) evaluates — is the bucket's sorted
+    // rank mod n. Checked through Spark itself, for random bucket subsets
+    // and slot counts 1–64
+    val rnd = new scala.util.Random(20261017L)
+    val trials = (0 until 200).map { t =>
+      val buckets = (0 until nBuckets).filter(_ => rnd.nextInt(3) > 0) match {
+        case Seq() => Seq(rnd.nextInt(nBuckets))
+        case bs => bs
+      }
+      val slotCount = 1 + rnd.nextInt(64)
+      val (n, keys) = PersistentGraphStore.route(rnd.shuffle(buckets), slotCount)
+      assert(n == math.min(buckets.size, slotCount))
+      assert(keys.keySet == buckets.toSet)
+      (t, n, buckets.sorted.zipWithIndex.map { case (b, r) => (b, r % n, keys(b)) })
+    }
+    val rows = trials.flatMap { case (t, n, bs) =>
+      bs.map { case (b, slot, key) => (t, n, b, slot, key) }
+    }.toDF("t", "n", "b", "slot", "key")
+    val wrong = rows.filter(pmod(hash(col("key")), col("n")) =!= col("slot"))
+    assert(wrong.count() == 0, wrong.limit(5).collect().mkString(", "))
+    // and through a real shuffle, for a few of them
+    trials.take(4).foreach { case (t, n, bs) =>
+      val got = bs.map { case (b, _, key) => (b, key) }.toDF("b", "key")
+        .repartition(n, col("key"))
+        .select(col("b"), spark_partition_id().as("p"))
+        .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
+      bs.foreach { case (b, slot, _) =>
+        assert(got(b) == slot, s"trial $t: bucket $b on ${got(b)}, want $slot")
+      }
+    }
+  }
+
+  test("merge and upsertEdges leave a caller-owned cache in place") {
+    val store = freshStore()
+    val cached = v1.persist()
+    try {
+      (1 to 2).foreach(_ => store.merge("vertices", cached, Seq("sourceId"),
+        compareCols = Seq("name", "deprecated"), setCols = Seq("subsets")))
+      assert(cached.storageLevel != StorageLevel.NONE,
+        "merge dropped the caller's cache")
+    } finally cached.unpersist()
+    val edges = Seq(("a", "b", "SubClassOf")).toDF("out", "in", "edgeClass")
+      .persist()
+    try {
+      (1 to 2).foreach(_ => store.upsertEdges(edges))
+      assert(edges.storageLevel != StorageLevel.NONE,
+        "upsertEdges dropped the caller's cache")
+    } finally edges.unpersist()
+    // a frame the store cached itself is released again
+    val own = v1.filter(col("sourceId") =!= "zz")
+    store.merge("vertices", own, Seq("sourceId"),
+      compareCols = Seq("name", "deprecated"), setCols = Seq("subsets"))
+    assert(own.storageLevel == StorageLevel.NONE)
   }
 }

@@ -106,6 +106,31 @@ class PhraseSpec extends AnyFunSuite {
     }
   }
 
+  test("proximity refuses a posting whose positions are not strictly " +
+    "ascending") {
+    // the interval-union vote dedup needs strictly ascending positions; a
+    // repeated or descending one would emit a count-down sequence of
+    // votes outside the window, so it must fail loudly instead
+    val spark2 = spark
+    import spark2.implicits._
+    val idx = Retrieval.buildPosIndex(Seq((1L, "a b a")).toDF("doc_id", "text"),
+      "doc_id", "text")
+    val q = Seq((100L, "a b")).toDF("qid", "qtext")
+    for (bad <- Seq(Seq(2L, 2L), Seq(2L, 0L), Seq(0L, 3L, 1L))) {
+      val broken = idx.postings.withColumn("positions",
+        when(col("word") === "a", typedLit(bad)).otherwise(col("positions")))
+      val e = intercept[Exception](
+        Retrieval.proximityTopK(q, "qid", "qtext", broken, 10, 3).collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toList
+      assert(msgs.exists(_.contains("positions must be strictly ascending")),
+        s"positions $bad: ${msgs.headOption}")
+    }
+    // the intact index still answers
+    assert(Retrieval.proximityTopK(q, "qid", "qtext", idx.postings, 10, 3)
+      .count() == 1)
+  }
+
   test("phrase matches ⊆ proximity matches at W ≥ phrase length") {
     val docs = spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
     val queries = docs.filter(col("doc_id") % 89 === 0)
